@@ -5562,7 +5562,12 @@ object LogLake {
   }
 
   /** Post-staging adoption, shared by [[writeData]] and the DSv2
-    * streaming writer: ONE metadata-sized aggregate over the staged
+    * streaming writer. A write with no CHECK / generated-column /
+    * row-id work takes its per-file stats from the staged footers
+    * ([[footerAddFiles]]) and launches no Spark job, float/double
+    * zero extremes included (stored as canonical `0.0`); NaN extremes,
+    * decimals and footers without usable stats fall back to the
+    * aggregate. Otherwise ONE metadata-sized aggregate over the staged
     * files collects per-file stats AND validates every CHECK
     * constraint and NOT NULL column invariant (flags ride the stats
     * aggregate as extra columns; only an actual violation pays a
@@ -5609,8 +5614,9 @@ object LogLake {
     // commutes with min/max under that order (monotone prefix map) —
     // [[footerAddFiles]] returns None (falling through to the
     // aggregate) on ANY column whose footer stats are absent, unset,
-    // or of a type whose parity is not proven (float/double/decimal
-    // NaN/scale rendering).
+    // or of a type whose parity is not proven (float/double NaN,
+    // decimal scale rendering); a float/double zero extreme is served,
+    // rendered as canonical 0.0 by both paths ([[renderStats]]).
     // NOT NULL invariants ride the footers too: a column's footer null
     // count of zero IS the proof the aggregate's __notnull flag would
     // compute; any nonzero (or unreadable) count falls back to the
@@ -5717,13 +5723,15 @@ object LogLake {
     *  - stats-column types are limited to bool/integral/float/double/
     *    date/timestamp/string. Decimals (scale rendering) always fall
     *    back. Float/double chunks with NaN-tainted extremes fall back
-    *    (parquet-mr omits the stats, so `isEmpty` trips), and a
-    *    float/double extreme of ±0.0 falls back too: parquet-mr's
-    *    writer WIDENS zero bounds per the float sort-order rule (a
-    *    +0.0 min is stored as -0.0, a -0.0 max as +0.0), so a stored
-    *    zero extreme may differ in sign from the value the aggregate
-    *    would compute — and these stats feed metadata-only MIN/MAX
-    *    answers, where -0.0 vs 0.0 is observable.
+    *    (parquet-mr omits the stats, so `isEmpty` trips). A
+    *    float/double extreme of ±0.0 is served: parquet-mr WIDENS zero
+    *    bounds (a +0.0 min reads back as -0.0, a -0.0 max as +0.0), so
+    *    the footer cannot tell the sign — but neither can the
+    *    aggregate (SQL min/max keep the first zero they meet), and
+    *    [[renderStats]] stores every zero extreme as canonical `0.0`
+    *    on both paths. Pruning compares ±0.0 equal ([[cmp]]) and
+    *    metadata-only MIN/MAX refuses a zero bound, so the lost sign
+    *    is never observable.
     *  - a column chunk with absent/unset statistics (e.g. dropped
     *    above parquet-mr's 4 KB cap — huge text extremes) falls back.
     *  - value parity: parquet compares strings as unsigned UTF-8 bytes
@@ -5751,11 +5759,10 @@ object LogLake {
         pt: org.apache.parquet.schema.PrimitiveType): Boolean = dt match {
       case BooleanType => pt.getPrimitiveTypeName == BOOLEAN
       case ByteType | ShortType | IntegerType => pt.getPrimitiveTypeName == INT32
-      // float/double: parquet's comparator is Double.compare — the
-      // same NaN-largest / -0.0<0.0 total order Spark's min/max
-      // aggregates use (SQLOrderingUtil), so NONZERO extremes
-      // round-trip; ±0.0 extremes are widened by parquet-mr's writer
-      // and fall back in the stats loop below
+      // float/double: parquet's comparator is Double.compare, which
+      // agrees with Spark's SQL min/max order (SQLOrderingUtil) on
+      // every pair but ±0.0, so NONZERO extremes round-trip exactly;
+      // a zero extreme renders as canonical 0.0 on both paths
       case FloatType => pt.getPrimitiveTypeName == FLOAT
       case DoubleType => pt.getPrimitiveTypeName == DOUBLE
       case LongType => pt.getPrimitiveTypeName == INT64 &&
@@ -5863,17 +5870,6 @@ object LogLake {
                   if (mn == null || cmp.compare(bmn, mn) < 0) mn = bmn
                   if (mx == null || cmp.compare(bmx, mx) > 0) mx = bmx
                 } else if (st.getNumNulls != b.getRowCount) return None
-              }
-              // parquet-mr widens float/double ZERO bounds on write
-              // (min +0.0 → stored -0.0, max -0.0 → stored +0.0, per
-              // the Parquet float sort-order rule), so a stored zero
-              // extreme may not be the sign the aggregate would
-              // compute — fall back (r18, ADVICE r17)
-              dt match {
-                case FloatType | DoubleType if mn != null &&
-                  (mn.asInstanceOf[Number].doubleValue() == 0d ||
-                    mx.asInstanceOf[Number].doubleValue() == 0d) => return None
-                case _ => ()
               }
               val rendered =
                 if (mn == null) ColStats("null", "", "", nulls)
@@ -6289,9 +6285,9 @@ object LogLake {
       // best-effort by design (the commit already won; a reader only
       // loses the accelerator) — but silent loss of every future
       // checkpoint is an operability hole, so name the failure
-      System.err.println(
-        s"loglake: checkpoint write at v$v failed (best-effort, " +
-          s"table still consistent): $e")
+      org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$")).warn(
+        s"loglake: checkpoint write at v$v of $dir failed (best-effort, " +
+          "table still consistent)", e)
     } finally invalidateAutoBytes(dir) // the auto-enable byte signal moved
 
   /** CHECKPOINT WRITE AS A JOB (Delta's checkpoint-job posture — the
@@ -6719,6 +6715,7 @@ object LogLake {
       prefixLen: Int): ColStats = {
     val (t, lo) = typedRender(mnV)
     val (_, hi) = typedRender(mxV)
+    if (t == "double") return ColStats(t, zeroCanonical(lo), zeroCanonical(hi), nulls)
     if (t != "string" || prefixLen <= 0) return ColStats(t, lo, hi, nulls)
     val loCp = lo.codePointCount(0, lo.length)
     val hiCp = hi.codePointCount(0, hi.length)
@@ -6732,6 +6729,16 @@ object LogLake {
     }
   }
 
+  /** A float/double ZERO extreme is stored as canonical `0.0`
+    * whatever its sign: parquet-mr widens zero bounds in footers (a
+    * +0.0 min reads back as -0.0, a -0.0 max as +0.0), and Spark's
+    * min/max keep whichever zero they meet first (SQL compares
+    * -0.0 = 0.0). One rendering keeps the footer and aggregate paths
+    * byte-identical; consumers treat a zero bound as "some zero"
+    * ([[cmp]] orders ±0.0 equal, metadata-only MIN/MAX refuses it). */
+  private def zeroCanonical(v: String): String =
+    if (v == "-0.0") "0.0" else v
+
   /** The per-table string-stats cap ([[DefaultStringStatsPrefixLen]]). */
   private def stringStatsPrefixLen(dir: String): Int =
     tableProperties(dir).get("loglake.stats.stringPrefixLength")
@@ -6744,7 +6751,12 @@ object LogLake {
     case "long" =>
       try java.lang.Long.compare(a.toLong, b.toLong) catch { case _: Exception => 0 }
     case "double" =>
-      try java.lang.Double.compare(a.toDouble, b.toDouble) catch { case _: Exception => 0 }
+      // SQL order, as the pushed filter evaluates it: ±0.0 equal (a
+      // stored zero bound may hold either sign), NaN largest
+      try {
+        val (x, y) = (a.toDouble, b.toDouble)
+        if (x == y) 0 else java.lang.Double.compare(x, y)
+      } catch { case _: Exception => 0 }
     case "decimal" =>
       try new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b))
       catch { case _: Exception => 0 }

@@ -209,16 +209,25 @@ class LogLakeMetadataOnlyCountRule extends Rule[LogicalPlan] {
     Some(kept)
   }
 
+  /** A stored bound that is SOUND for file skipping but not the exact
+    * extreme value, so MIN/MAX must not answer with it:
+    *  - TRUNCATED string stats ([[LogLake.StringTruncTag]]): a 32-cp
+    *    prefix (or its prefix-increment);
+    *  - a float/double ZERO: stored as canonical `0.0` whatever the
+    *    data's sign (parquet footers widen zero bounds), and manifests
+    *    written before that rule may hold `-0.0` from a scan that met
+    *    either sign first. The scan returns the exact sign. */
+  private def inexactBound(tag: String, s: String): Boolean =
+    tag == LogLake.StringTruncTag ||
+      (tag == "double" && s.toDoubleOption.contains(0d))
+
   /** Decodes a manifest stats rendering ([[LogLake.ColStats]] tag +
-    * string) back to the column's INTERNAL Catalyst value. None = a
-    * tag/type pairing we can't reconstruct exactly — keep the scan. */
+    * string) back to the column's INTERNAL Catalyst value. None = an
+    * [[inexactBound]] or a tag/type pairing we can't reconstruct
+    * exactly — keep the scan. */
   private def decodeStat(tag: String, s: String, dt: DataType): Option[Any] =
-    (tag, dt) match {
-      // TRUNCATED string stats ([[LogLake.StringTruncTag]]) are sound
-      // BOUNDS, not exact extremes: answering MIN/MAX from them would
-      // return a 32-cp prefix (or its prefix-increment) as the query
-      // result. REFUSE — the query falls back to the data scan.
-      case (LogLake.StringTruncTag, _) => None
+    if (inexactBound(tag, s)) None
+    else (tag, dt) match {
       case ("string", StringType) => Some(UTF8String.fromString(s))
       case ("long", LongType) => Some(s.toLong)
       case ("long", IntegerType) => Some(s.toLong.toInt)
@@ -246,17 +255,17 @@ class LogLakeMetadataOnlyCountRule extends Rule[LogicalPlan] {
       phys: String, isPart: Boolean): Option[(Option[Any], Option[Any], Long)] = {
     f.stats.get(phys) match {
       case Some(s) if s.tpe == "null" => Some((None, None, s.nulls))
-      // truncated string stats: the BOUNDS are refused (inexact) but
-      // the null count is still exact — COUNT(col) stays
+      // an inexact bound (truncated string, float zero) is refused on
+      // its own but the null count is still exact — COUNT(col) stays
       // metadata-only; MIN/MAX must check `rows - nulls` before
-      // treating the empty bounds as "no values in this file"
-      case Some(s) if s.tpe == LogLake.StringTruncTag =>
-        Some((None, None, s.nulls))
+      // treating a missing bound as "no values in this file"
       case Some(s) =>
-        for {
-          lo <- decodeStat(s.tpe, s.min, attr.dataType)
-          hi <- decodeStat(s.tpe, s.max, attr.dataType)
-        } yield (Some(lo), Some(hi), s.nulls)
+        def bound(v: String): Option[Option[Any]] =
+          decodeStat(s.tpe, v, attr.dataType) match {
+            case None if !inexactBound(s.tpe, v) => None
+            case exact => Some(exact)
+          }
+        for (lo <- bound(s.min); hi <- bound(s.max)) yield (lo, hi, s.nulls)
       case None if isPart && f.partitionValues.contains(phys) =>
         val sv = f.partitionValues(phys)
         if (sv == LogLake.NullPartitionValue) Some((None, None, f.rows))
@@ -308,7 +317,7 @@ class LogLakeMetadataOnlyCountRule extends Rule[LogicalPlan] {
         val mins = live.flatMap { f =>
           val (lo, _, nulls) = fileStats(f, a, phys, isPart).getOrElse(return None)
           // a file with non-null values but no EXACT bound (truncated
-          // string stats) cannot be skipped — refuse the whole rewrite
+          // string, float zero) cannot be skipped — refuse the rewrite
           if (lo.isEmpty && f.rows - nulls > 0L) return None
           lo
         }

@@ -87,30 +87,33 @@ class FooterStatsSpec extends SparkTestBase {
     assert(statsOf(d1) === statsOf(d2))
   }
 
-  test("±0.0 float/double extremes fall back (parquet-mr widens zero bounds) with parity") {
-    // parquet-mr's writer widens zero bounds per the float sort-order
-    // rule: a +0.0 min is STORED as -0.0 and a -0.0 max as +0.0, so a
-    // footer-served zero extreme could render the wrong sign where the
-    // aggregate (and the oracle) see the true value. The fast path must
-    // fall back on any ±0.0 extreme (r18, ADVICE r17) — and the
-    // fallback must keep the rendered stats identical.
+  test("±0.0 float/double extremes are footer-served as canonical 0.0 with parity") {
+    // parquet-mr widens zero bounds per the float sort-order rule (a
+    // +0.0 min reads back as -0.0, a -0.0 max as +0.0), so the footer
+    // cannot tell a zero extreme's sign — and neither can the
+    // aggregate, whose SQL min/max keep the first zero they meet. Both
+    // paths store a zero extreme as canonical 0.0, so the footer path
+    // serves these writes and the rendered stats stay identical.
     val zeroMin = Seq(
       (1L, Some(0.0d), Some(-0.0f)),   // d: min exactly +0.0
       (2L, Some(3.5d), Some(-0.0f)),   // f: min = max = -0.0
       (3L, None, None)
     ).toDF("k", "d", "f")
-    val (d1, d2) = both("zeroext", zeroMin, expectFooter = false)
+    val (d1, d2) = both("zeroext", zeroMin)
     assert(statsOf(d1) === statsOf(d2))
     val zeroMax = Seq(
       (1L, Some(-0.0d), Some(-7.5f)),  // d: max exactly -0.0 (all -0.0)
       (2L, Some(-0.0d), Some(-1.5f)),
       (3L, None, None)
     ).toDF("k", "d", "f")
-    val (d3, d4) = both("zeromax", zeroMax, expectFooter = false)
+    val (d3, d4) = both("zeromax", zeroMax)
     assert(statsOf(d3) === statsOf(d4))
+    assert((statsOf(d1) ++ statsOf(d3)).flatMap(_._2.values)
+      .forall { case (_, mn, mx, _) => mn != "-0.0" && mx != "-0.0" },
+      "a zero extreme must render as canonical 0.0")
     // a file with NONZERO float/double extremes that merely CONTAINS
-    // zeros is still footer-served — the fallback keys on extremes
-    // (one file, so the zero is interior to ITS extremes)
+    // zeros keeps its exact extremes (one file, so the zero is
+    // interior to ITS extremes)
     val nonzeroExt = Seq(
       (1L, Some(-1.0d), Some(-3.5f)),
       (2L, Some(0.0d), Some(0.0f)),
